@@ -1164,7 +1164,7 @@ def q_approx_distinct_quantiles(spark, sf_dir):
     The quantiles array is serialized to a JSON string: the driver's
     rows-only canonicalizer hashes rows via pandas and dies on unhashable
     list cells (CORRECTNESS_r01 red row)."""
-    orders = _tp(spark, sf_dir, "orders").withColumn("part", F.lit("all"))
+    orders = _t(spark, sf_dir, "orders").withColumn("part", F.lit("all"))
     st = ST.column_stats(orders, partition_col="part", columns=["o_custkey", "o_totalprice"])
     return st.select(
         "part",

@@ -52,6 +52,7 @@ def main(argv: list[str] | None = None) -> int:
     from faang_pydantics_validation_spark.plans.fused import validate_transcripts_fused
     from faang_pydantics_validation_spark.plans.verdicts import (
         render_report,
+        rule_counts,
         write_results_json,
     )
     from faang_pydantics_validation_spark.session import get_spark
@@ -112,31 +113,31 @@ def main(argv: list[str] | None = None) -> int:
         )
         violations, verdicts_df = res.violations, res.verdicts
 
+    # Each result is computed once: the verdict table is collected once
+    # (from its cache, filled by the parquet write) and the per-rule counts
+    # aggregated once; the report and the summary line derive from those.
     if args.out:
         os.makedirs(args.out, exist_ok=True)
         if not args.checkpoint:  # checkpoint mode already wrote parquet
             violations.write.mode("overwrite").parquet(f"{args.out}/violations")
+            verdicts_df = verdicts_df.persist()
             verdicts_df.write.mode("overwrite").parquet(f"{args.out}/verdicts")
-        write_results_json(f"{args.out}/validation_results.json", verdicts_df, violations)
+        payload = write_results_json(
+            f"{args.out}/validation_results.json", verdicts_df, violations
+        )
+        rows, counts = payload["verdicts"], payload["violations_by_rule"]
+    else:
+        rows = [r.asDict() for r in verdicts_df.collect()]
+        counts = rule_counts(violations)
 
-    rows = [r.asDict() for r in verdicts_df.collect()]
-    n_vio = violations.count()
     if args.report:
-        from pyspark.sql import functions as F
-
-        rule_counts = [
-            r.asDict()
-            for r in violations.groupBy("rule_id", "severity")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        ]
-        print(render_report(rows, rule_counts))
+        print(render_report(rows, counts))
     print(
         json.dumps(
             {
                 "partitions": len(rows),
                 "failed": sum(1 for r in rows if r["verdict"] == "fail"),
-                "violations": n_vio,
+                "violations": sum(r["n"] for r in counts),
                 "wall_sec": round(time.time() - t0, 2),
             }
         )

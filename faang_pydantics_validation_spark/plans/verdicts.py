@@ -5,8 +5,52 @@ analogs of the reference's summary/report/export stages
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..rules.memo import memo
+
+
+def _verdict_columns(partition_col: str) -> SimpleNamespace:
+    """verdicts()' Columns, built once per SparkContext (rules/memo)."""
+
+    def build() -> SimpleNamespace:
+        c = SimpleNamespace()
+        c.totals = (
+            F.count(F.lit(1)).alias("total_turns"),
+            F.countDistinct("conv_id").alias("n_conversations"),
+        )
+        c.is_turn = F.col("scope") == "turn"
+        c.turn_key = tuple(map(F.col, [partition_col, "conv_id", "turn_idx"]))
+        c.per_turn = (
+            F.max((F.col("severity") == "error").cast("int")).alias("has_error"),
+            F.max((F.col("severity") == "warning").cast("int")).alias("has_warning"),
+        )
+        c.turn_agg = (
+            F.sum("has_error").alias("error_turns"),
+            F.sum(((F.col("has_warning") == 1) & (F.col("has_error") == 0)).cast("int")).alias(
+                "warning_only_turns"
+            ),
+        )
+        c.is_conv = F.col("scope") == "conv"
+        c.conv_agg = F.count(F.lit(1)).alias("relationship_errors")
+        c.out = (
+            c.turn_key[0],
+            *map(F.col, ["total_turns", "n_conversations"]),
+            (F.col("total_turns") - F.col("error_turns")).alias("valid_turns"),
+            *map(F.col, ["error_turns", "warning_only_turns", "relationship_errors"]),
+            F.when(
+                (F.col("error_turns") > 0) | (F.col("relationship_errors") > 0), F.lit("fail")
+            )
+            .when(F.col("warning_only_turns") > 0, F.lit("pass_with_warnings"))
+            .otherwise(F.lit("pass"))
+            .alias("verdict"),
+        )
+        return c
+
+    return memo(("verdicts", partition_col), build)
 
 
 def verdicts(
@@ -22,26 +66,12 @@ def verdicts(
     (base_validator.py:167-188). One hash-agg pass over violations + one
     metadata-cheap count over facts.
     """
-    totals = facts.groupBy(partition_col).agg(
-        F.count(F.lit(1)).alias("total_turns"),
-        F.countDistinct("conv_id").alias("n_conversations"),
-    )
-    turn_v = violations.where(F.col("scope") == "turn")
-    per_turn = turn_v.groupBy(partition_col, "conv_id", "turn_idx").agg(
-        F.max((F.col("severity") == "error").cast("int")).alias("has_error"),
-        F.max((F.col("severity") == "warning").cast("int")).alias("has_warning"),
-    )
-    turn_agg = per_turn.groupBy(partition_col).agg(
-        F.sum("has_error").alias("error_turns"),
-        F.sum(((F.col("has_warning") == 1) & (F.col("has_error") == 0)).cast("int")).alias(
-            "warning_only_turns"
-        ),
-    )
-    conv_agg = (
-        violations.where(F.col("scope") == "conv")
-        .groupBy(partition_col)
-        .agg(F.count(F.lit(1)).alias("relationship_errors"))
-    )
+    c = _verdict_columns(partition_col)
+    pc = c.turn_key[0]
+    totals = facts.groupBy(pc).agg(*c.totals)
+    per_turn = violations.where(c.is_turn).groupBy(*c.turn_key).agg(*c.per_turn)
+    turn_agg = per_turn.groupBy(pc).agg(*c.turn_agg)
+    conv_agg = violations.where(c.is_conv).groupBy(pc).agg(c.conv_agg)
     out = (
         totals.join(turn_agg, on=partition_col, how="left")
         .join(conv_agg, on=partition_col, how="left")
@@ -49,21 +79,7 @@ def verdicts(
             {"error_turns": 0, "warning_only_turns": 0, "relationship_errors": 0}
         )
     )
-    return out.select(
-        partition_col,
-        "total_turns",
-        "n_conversations",
-        (F.col("total_turns") - F.col("error_turns")).alias("valid_turns"),
-        "error_turns",
-        "warning_only_turns",
-        "relationship_errors",
-        F.when(
-            (F.col("error_turns") > 0) | (F.col("relationship_errors") > 0), F.lit("fail")
-        )
-        .when(F.col("warning_only_turns") > 0, F.lit("pass_with_warnings"))
-        .otherwise(F.lit("pass"))
-        .alias("verdict"),
-    )
+    return out.select(*c.out)
 
 
 def verdicts_fast(
@@ -122,18 +138,40 @@ def verdicts_fast(
     )
 
 
-def verdict_rollup(verdict_df: DataFrame, partition_col: str = "ds") -> DataFrame:
+_ROLLUP_SUMS = (
+    "total_turns",
+    "n_conversations",
+    "valid_turns",
+    "error_turns",
+    "warning_only_turns",
+    "relationship_errors",
+)
+
+
+def verdict_rollup(verdict_rows: list) -> dict:
     """G2: grand-total rollup across partitions — the analog of
-    unified_validator.py:199-205,224-231 total_summary. One row."""
-    return verdict_df.agg(
-        F.count(F.lit(1)).alias("n_partitions"),
-        F.sum("total_turns").alias("total_turns"),
-        F.sum("n_conversations").alias("n_conversations"),
-        F.sum("valid_turns").alias("valid_turns"),
-        F.sum("error_turns").alias("error_turns"),
-        F.sum("warning_only_turns").alias("warning_only_turns"),
-        F.sum("relationship_errors").alias("relationship_errors"),
-        F.sum((F.col("verdict") == "fail").cast("long")).alias("failed_partitions"),
+    unified_validator.py:199-205,224-231 total_summary — over the
+    (collected, one row per partition) verdict table. SQL aggregate
+    semantics: over zero partitions every sum is None."""
+
+    def total(values) -> int | None:
+        return sum(values) if verdict_rows else None
+
+    return {
+        "n_partitions": len(verdict_rows),
+        **{k: total(r[k] for r in verdict_rows) for k in _ROLLUP_SUMS},
+        "failed_partitions": total(int(r["verdict"] == "fail") for r in verdict_rows),
+    }
+
+
+def rule_counts(violations: DataFrame) -> list[dict]:
+    """Per-(rule_id, severity) violation counts, most frequent first: one
+    aggregate action. The few result rows are sorted on the driver (a
+    Spark orderBy would add a sampling and a shuffle job)."""
+    rows = violations.groupBy("rule_id", "severity").agg(F.count(F.lit(1)).alias("n"))
+    return sorted(
+        (r.asDict() for r in rows.collect()),
+        key=lambda r: (-r["n"], r["rule_id"] or "", r["severity"] or ""),
     )
 
 
@@ -142,24 +180,24 @@ def write_results_json(
     verdict_df: DataFrame,
     violations: DataFrame,
     max_violation_rows: int = 10000,
-) -> None:
+) -> dict:
     """S5 analog: dump {summary, verdicts, violations, report} to one JSON
     file (main.py:79-87 writes validation_results.json). Violations are
     capped — at 10^12-turn scale the full violation set lives in the
-    parquet sink (checkpoint.py), not in a driver-side JSON."""
+    parquet sink (checkpoint.py), not in a driver-side JSON.
+
+    Three actions: the verdict collect, the per-rule counts and the capped
+    violation rows. Returns the payload, so a caller can reuse the
+    collected verdicts and counts instead of recomputing them."""
     import json
 
+    # one row per partition: sorted on the driver, like the rule counts
     verdict_rows = [
-        {**r.asDict(), "ds": str(r["ds"])} for r in verdict_df.orderBy("ds").collect()
+        {**r.asDict(), "ds": str(r["ds"])}
+        for r in sorted(verdict_df.collect(), key=lambda r: (r["ds"] is not None, r["ds"]))
     ]
-    rollup = verdict_rollup(verdict_df).first().asDict()
-    rule_counts = [
-        r.asDict()
-        for r in violations.groupBy("rule_id", "severity")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), "rule_id")
-        .collect()
-    ]
+    rollup = verdict_rollup(verdict_rows)
+    counts = rule_counts(violations)
     vio_rows = [
         {**r.asDict(), "ds": str(r["ds"])}
         for r in violations.orderBy("conv_id", "turn_idx", "rule_id")
@@ -169,13 +207,14 @@ def write_results_json(
     payload = {
         "total_summary": rollup,
         "verdicts": verdict_rows,
-        "violations_by_rule": rule_counts,
+        "violations_by_rule": counts,
         "violations": vio_rows,
         "violations_truncated": len(vio_rows) >= max_violation_rows,
-        "report": render_report(verdict_rows, rule_counts),
+        "report": render_report(verdict_rows, counts),
     }
     with open(path, "w") as f:
         json.dump(payload, f, indent=1, default=str)
+    return payload
 
 
 def render_report(verdict_rows: list, rule_counts: list) -> str:
@@ -199,6 +238,20 @@ def render_report(verdict_rows: list, rule_counts: list) -> str:
     return "\n".join(lines)
 
 
+def _valid_turns(facts: DataFrame, violations: DataFrame) -> DataFrame:
+    """Facts rows whose (conv_id, turn_idx) key carries no turn-scope
+    error: an anti-join against the distinct error-bearing keys."""
+    is_error, keys = memo(
+        ("error_turn_keys",),
+        lambda: (
+            (F.col("scope") == "turn") & (F.col("severity") == "error"),
+            (F.col("conv_id"), F.col("turn_idx")),
+        ),
+    )
+    bad_keys = violations.where(is_error).select(*keys).distinct()
+    return facts.join(bad_keys, on=["conv_id", "turn_idx"], how="left_anti")
+
+
 def export_valid(
     facts: DataFrame,
     violations: DataFrame,
@@ -208,13 +261,7 @@ def export_valid(
     term->URL expansion the reference does per record
     (validation_utils.py:18-31 -> obo PURL). Anti-join against
     error-bearing turns; stable ordering by (conv_id, turn_idx)."""
-    bad_keys = (
-        violations.where((F.col("scope") == "turn") & (F.col("severity") == "error"))
-        .select("conv_id", "turn_idx")
-        .distinct()
-    )
-    valid = facts.join(bad_keys, on=["conv_id", "turn_idx"], how="left_anti")
-    return valid.select(
+    return _valid_turns(facts, violations).select(
         "conv_id",
         "turn_idx",
         partition_col,
@@ -261,12 +308,12 @@ def export_valid_structured(
     to_json, matching the reference's key omission); the conversation
     membership is the relationship edge, as child_of is in the reference.
     Pure column expressions — the nesting costs no shuffle."""
-    bad_keys = (
-        violations.where((F.col("scope") == "turn") & (F.col("severity") == "error"))
-        .select("conv_id", "turn_idx")
-        .distinct()
-    )
-    valid = facts.join(bad_keys, on=["conv_id", "turn_idx"], how="left_anti")
+    cols = memo(("export_structured", partition_col), lambda: _export_columns(partition_col))
+    return _valid_turns(facts, violations).select(*cols)
+
+
+def _export_columns(partition_col: str) -> tuple:
+    """export_valid_structured's projection (built once, rules/memo)."""
     text_entry = F.array(F.struct(F.col("text").cast("string").alias("text")))
     role_entry = F.when(
         F.col("role").isNotNull() & (F.trim("role") != ""),
@@ -296,10 +343,8 @@ def export_valid_structured(
     relationships = F.array(
         F.struct(F.lit("member of").alias("type"), F.col("conv_id").alias("target"))
     )
-    return valid.select(
-        "conv_id",
-        "turn_idx",
-        partition_col,
+    return (
+        *map(F.col, ["conv_id", "turn_idx", partition_col]),
         F.struct(
             characteristics.alias("characteristics"),
             relationships.alias("relationships"),

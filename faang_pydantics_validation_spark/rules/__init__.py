@@ -1,5 +1,5 @@
 from .spec import RuleSpec, Severity, Tier, SENTINELS, MISSING_VALUE_POLICY
-from .compiler import compile_row_rules, violations_from_flags
+from .compiler import compile_row_rules
 
 __all__ = [
     "RuleSpec",
@@ -8,5 +8,4 @@ __all__ = [
     "SENTINELS",
     "MISSING_VALUE_POLICY",
     "compile_row_rules",
-    "violations_from_flags",
 ]

@@ -14,10 +14,14 @@ early returns (organism_ruleset.py:120-121).
 
 from __future__ import annotations
 
+import functools
+import operator
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .library import get_builder
+from .memo import memo
 from .spec import MISSING_VALUE_POLICY, RuleSpec
 
 _VIOLATION_STRUCT = "struct<rule_id:string,severity:string,observed:string>"
@@ -105,22 +109,44 @@ def rule_to_flags(rule: RuleSpec) -> tuple[Column, Column]:
     )
 
 
+def rules_key(rules: list[RuleSpec]) -> str:
+    """Memo key of a ruleset: every field of every rule, in ORDER (the
+    packed violation array follows rule order, so a reordered ruleset is
+    a different expression — unlike ruleset_hash, which sorts by id)."""
+    return repr(tuple(rules))
+
+
+def rule_structs(rules: list[RuleSpec]) -> tuple[Column, ...]:
+    """rule_to_struct for each rule, built once per ruleset (rules/memo)."""
+    return memo(("rule_structs", rules_key(rules)), lambda: tuple(map(rule_to_struct, rules)))
+
+
 def rules_flags(rules: list[RuleSpec]) -> tuple[Column, Column]:
     """(any_error, any_warning) over a whole ruleset — the boolean-only
     twin of rules_array for verdict aggregation."""
-    import functools
-    import operator
 
-    flags = [rule_to_flags(r) for r in rules]
-    he = functools.reduce(operator.or_, (f[0] for f in flags), F.lit(False))
-    hw = functools.reduce(operator.or_, (f[1] for f in flags), F.lit(False))
-    return he, hw
+    def build() -> tuple[Column, Column]:
+        flags = [rule_to_flags(r) for r in rules]
+        he = functools.reduce(operator.or_, (f[0] for f in flags), F.lit(False))
+        hw = functools.reduce(operator.or_, (f[1] for f in flags), F.lit(False))
+        return he, hw
+
+    return memo(("rules_flags", rules_key(rules)), build)
+
+
+def pack_structs(structs) -> Column:
+    """Array of the non-NULL violation structs among `structs`."""
+    return F.filter(
+        F.array(*[s.cast(_VIOLATION_STRUCT) for s in structs]), lambda x: x.isNotNull()
+    )
 
 
 def rules_array(rules: list[RuleSpec]) -> Column:
     """Array of non-NULL violation structs for a row."""
-    packed = F.array(*[rule_to_struct(r) for r in rules])
-    return F.filter(packed, lambda x: x.isNotNull())
+    return memo(
+        ("rules_array", rules_key(rules)),
+        lambda: F.filter(F.array(*rule_structs(rules)), lambda x: x.isNotNull()),
+    )
 
 
 def compile_row_rules(
@@ -135,41 +161,25 @@ def compile_row_rules(
     scope='turn', observed).
     """
     keys = list(key_cols) + ([partition_col] if partition_col else [])
-    arr = rules_array(rules).alias("__v")
+
+    def build():
+        kc = tuple(map(F.col, keys))
+        return (
+            (*kc, rules_array(rules).alias("__v")),
+            (*kc, F.explode("__v").alias("v")),
+            (
+                *kc,
+                F.col("v.rule_id").alias("rule_id"),
+                F.col("v.severity").alias("severity"),
+                F.lit("turn").alias("scope"),
+                F.col("v.observed").alias("observed"),
+            ),
+        )
+
+    packed, exploded, out = memo(("row_rules", rules_key(rules), tuple(keys)), build)
     # NOTE: no `where(size(__v) > 0)` before the explode — explode already
     # drops empty arrays, and a Filter over the packed-array expression
     # sends Catalyst's InferFiltersFromConstraints into exponential
     # constraint inference on the giant conditional tree (measured: 38-rule
     # ruleset analyzed in ~8s without the filter vs minutes with it).
-    out = (
-        df.select(*keys, arr)
-        .select(*keys, F.explode("__v").alias("v"))
-        .select(
-            *keys,
-            F.col("v.rule_id").alias("rule_id"),
-            F.col("v.severity").alias("severity"),
-            F.lit("turn").alias("scope"),
-            F.col("v.observed").alias("observed"),
-        )
-    )
-    return out
-
-
-def violations_from_flags(
-    df: DataFrame,
-    rules: list[RuleSpec],
-    key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-    partition_col: str | None = "ds",
-) -> DataFrame:
-    """Per-row severity flags WITHOUT exploding — feeds the verdict
-    aggregation in the same pass (no second scan).
-
-    Output: (*keys, has_error, has_warning, n_violations)."""
-    keys = list(key_cols) + ([partition_col] if partition_col else [])
-    arr = rules_array(rules).alias("__v")
-    return df.select(*keys, arr).select(
-        *keys,
-        F.exists("__v", lambda x: x["severity"] == "error").alias("has_error"),
-        F.exists("__v", lambda x: x["severity"] == "warning").alias("has_warning"),
-        F.size("__v").alias("n_violations"),
-    )
+    return df.select(*packed).select(*exploded).select(*out)

@@ -14,6 +14,7 @@ can never drift semantically.
 from __future__ import annotations
 
 import datetime as dt
+from collections import Counter
 from typing import Any
 
 from pyspark.sql import SparkSession
@@ -111,7 +112,7 @@ def validate_json_batch(
         }
 
     from .plans.fused import validate_transcripts_fused
-    from .plans.verdicts import export_valid_structured, render_report
+    from .plans.verdicts import export_valid_structured, render_report, rule_counts
 
     res = validate_transcripts_fused(
         facts, dims or {}, scalar_rules=rules, persist_violations=True
@@ -126,10 +127,17 @@ def validate_json_batch(
         verdicts = [
             {**r.asDict(), "ds": str(r["ds"])} for r in res.verdicts.orderBy("ds").collect()
         ]
-        rule_counts: dict[tuple, int] = {}
-        for v in violations:
-            k = (v["rule_id"], v["severity"])
-            rule_counts[k] = rule_counts.get(k, 0) + 1
+        if len(violations) < max_rows_returned:
+            # the list is complete: count it, no extra Spark action
+            n_by_rule = Counter((v["rule_id"], v["severity"]) for v in violations)
+            counts = [
+                {"rule_id": r, "severity": sev, "n": n}
+                for (r, sev), n in sorted(n_by_rule.items())
+            ]
+        else:
+            # the list hit the cap: count over the still-cached violations
+            counts = rule_counts(res.violations)
+        truncated = sum(r["n"] for r in counts) > len(violations)
         exports = [
             {
                 "sample_name": f"{r['conv_id']}:{r['turn_idx']}",
@@ -154,12 +162,7 @@ def validate_json_batch(
         "message": "Validation completed successfully",
         "verdicts": verdicts,
         "violations": violations,
-        "report": render_report(
-            verdicts,
-            [
-                {"rule_id": k[0], "severity": k[1], "n": n}
-                for k, n in sorted(rule_counts.items())
-            ],
-        ),
+        "violations_truncated": truncated,
+        "report": render_report(verdicts, counts),
         "exports": exports,
     }

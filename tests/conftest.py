@@ -22,3 +22,24 @@ def dataset(spark):
     for df in tables.values():
         df.cache()
     return tables
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """spark_jobs(fn) -> (fn(), number of Spark jobs fn started), counted
+    in a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"spark_jobs_{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "counted")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -12,8 +12,8 @@ from faang_pydantics_validation_spark.plans.verdicts import (
 
 def test_rollup_and_json_sink(spark, dataset, tmp_path):
     res = validate_transcripts(dataset["transcripts"], dataset)
-    roll = verdict_rollup(res.verdicts).first()
     per_part = res.verdicts.collect()
+    roll = verdict_rollup([r.asDict() for r in per_part])
     assert roll["total_turns"] == sum(r["total_turns"] for r in per_part)
     assert roll["failed_partitions"] == sum(1 for r in per_part if r["verdict"] == "fail")
     assert roll["n_partitions"] == 4

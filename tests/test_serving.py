@@ -134,3 +134,23 @@ def test_serving_unpersists_violations(spark):
     for _ in range(3):
         validate_json_batch(spark, BATCH)
     assert n_cached() == before
+
+
+def test_report_counts_survive_truncated_violation_list(spark, spark_jobs):
+    """More violations than max_rows_returned: the list is cut at the cap,
+    violations_truncated is set, and the report still counts every
+    violation (from an aggregate over the cached violations). Under the cap
+    no extra Spark job runs."""
+    batch = [
+        {"conv_id": "c9", "turn_idx": i, "role": "", "text": "x", "tool": None,
+         "ts": f"2026-03-01T11:00:0{i}"}
+        for i in range(4)
+    ]
+    full, jobs_full = spark_jobs(lambda: validate_json_batch(spark, batch))
+    cut, jobs_cut = spark_jobs(lambda: validate_json_batch(spark, batch, max_rows_returned=3))
+    assert len(full["violations"]) > 3 and not full["violations_truncated"]
+    assert len(cut["violations"]) == 3 and cut["violations_truncated"]
+    assert cut["violations"] == full["violations"][:3]
+    assert cut["report"] == full["report"]
+    # the two requests differ only in the count aggregate
+    assert jobs_cut > jobs_full
